@@ -8,7 +8,7 @@ Five dedup families, each Spark-first and shuffle-conscious:
   minhash_lsh    — word-shingle MinHash signatures + banded LSH bucketing;
                    candidate pairs come from equi-joining band buckets, so
                    the quadratic all-pairs comparison never materializes.
-  simhash        — 64-bit SimHash per document + banded candidate pairs
+  simhash        — 60-bit SimHash per document + banded candidate pairs
                    (hamming-distance style near-dup).
   ngram_jaccard  — exact Jaccard over distinct word n-gram shingles; brute
                    force all-pairs (correctness baseline / oracle-checkable),
@@ -18,10 +18,10 @@ Five dedup families, each Spark-first and shuffle-conscious:
 
 Everything is Catalyst expressions (hash functions, higher-order array
 functions) — no Python UDFs, deterministic (fixed seed), so results are
-reproducible run-to-run and across cluster sizes. Hash-based operators
-take ``hash_fn``: "xxhash64" (default, JVM-intrinsic fast path) or "md5"
-(engine-portable via ``md5_long60``, giving the whole MinHash/SimHash
-family cross-engine value oracles — see plans/lsh_oracles.py).
+reproducible run-to-run and across cluster sizes. The MinHash/SimHash
+family hashes with ``md5_long60``, which any engine with md5 reproduces,
+so every member has a cross-engine value oracle (plans/lsh_oracles.py).
+Its ``hash_fn`` keyword accepts only "md5".
 """
 
 from __future__ import annotations
@@ -108,6 +108,7 @@ _MERSENNE_PRIME_31 = (1 << 31) - 1
 # 15 hex digits = 60 bits: the largest md5 prefix that fits a signed long
 # in every engine (16 digits could overflow BIGINT on the '0x...' cast).
 _MD5_HEX_DIGITS = 15
+_SIMHASH_BITS = 60
 
 
 def md5_long60(col: Column) -> Column:
@@ -118,23 +119,18 @@ def md5_long60(col: Column) -> Column:
     UTF-8 bytes, first 15 hex digits, parsed base-16. Any engine with an
     md5 function reproduces it bit-for-bit (DuckDB:
     ``('0x' || substring(md5(x), 1, 15))::BIGINT``), which is what gives
-    the MinHash/SimHash family full cross-engine value oracles. ~2-3x the
-    cost of xxhash64 (string md5 + hex parse vs one JVM intrinsic), so
-    operators default to xxhash64 and take ``hash_fn="md5"`` where the
-    differential-testing contract is worth the delta.
+    the MinHash/SimHash family full cross-engine value oracles; it is
+    the family's only base hash.
     """
     return F.conv(F.substring(F.md5(col), 1, _MD5_HEX_DIGITS), 16, 10).cast(
         "long"
     )
 
 
-def _base_hash(col: Column, hash_fn: str) -> Column:
-    """Shingle/token -> non-negative long, per the selected hash family."""
-    if hash_fn == "md5":
-        return md5_long60(col)
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+def _check_hash_fn(hash_fn: str) -> None:
+    """The LSH family has one base hash; ``hash_fn`` only names it."""
+    if hash_fn != "md5":
+        raise ValueError(f"hash_fn must be 'md5', got {hash_fn!r}")
 
 
 def floor_round(col: Column, scale: int) -> Column:
@@ -266,18 +262,17 @@ def minhash_signatures(
     num_perm: int = 64,
     shingle_n: int = 3,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-document MinHash signature (array<long> of length num_perm).
 
     Universal hashing h_i(x) = (a_i * x + b_i) mod p over p = 2^31-1, with
     the base hash folded into [0, p). Operands stay < 2^31 so the 64-bit
-    products cannot overflow (ANSI-safe).
-
-    ``hash_fn``: "xxhash64" (default, fastest — JVM intrinsic) or "md5"
-    (``md5_long60`` — engine-portable, giving the signature pipeline a
-    full cross-engine value oracle; see plans/lsh_oracles.py).
+    products cannot overflow (ANSI-safe). The base hash is ``md5_long60``,
+    so the signature pipeline has a full cross-engine value oracle (see
+    plans/lsh_oracles.py).
     """
+    _check_hash_fn(hash_fn)
     params = _minhash_params(num_perm, seed)
     # Plan shape chosen for throughput: explode shingles once, evaluate the
     # num_perm permutation hashes as flat codegen'd arithmetic columns, and
@@ -292,9 +287,7 @@ def minhash_signatures(
         F.explode(token_shingles(F.col("_w"), shingle_n)).alias("_sh"),
     ).select(
         F.col(id_col),
-        F.pmod(_base_hash(F.col("_sh"), hash_fn), F.lit(_MERSENNE_PRIME_31)).alias(
-            "_h"
-        ),
+        F.pmod(md5_long60(F.col("_sh")), F.lit(_MERSENNE_PRIME_31)).alias("_h"),
     )
     # The num_perm min-aggregates are built as ONE SQL string parsed
     # JVM-side: composing them Column-by-Column costs ~8 Py4J round
@@ -314,35 +307,29 @@ def minhash_bands(
     signatures: DataFrame,
     bands: int,
     id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """LSH banding of signature tables: (id, band, band_hash) rows, one per
     band per doc — the 24-byte currency every banded-join dedup variant
     shuffles instead of signatures or text.
 
-    ``hash_fn="md5"`` hashes the canonical string "band,v1,v2,..." via
-    ``md5_long60`` so a foreign engine reproduces the buckets (including
+    The band hash is ``md5_long60`` of the canonical string
+    "band,v1,v2,..." so a foreign engine reproduces the buckets (including
     any hash collisions) exactly.
     """
+    _check_hash_fn(hash_fn)
     sig_len = F.size(F.col("signature"))
     rows_per_band = (sig_len / F.lit(bands)).cast("int")
     sig_slice = F.slice(
         F.col("signature"), F.col("band") * rows_per_band + 1, rows_per_band
     )
-    if hash_fn == "md5":
-        band_hash = md5_long60(
-            F.concat_ws(
-                ",",
-                F.col("band").cast("string"),
-                F.array_join(
-                    F.transform(sig_slice, lambda x: x.cast("string")), ","
-                ),
-            )
+    band_hash = md5_long60(
+        F.concat_ws(
+            ",",
+            F.col("band").cast("string"),
+            F.array_join(F.transform(sig_slice, lambda x: x.cast("string")), ","),
         )
-    elif hash_fn == "xxhash64":
-        band_hash = F.xxhash64(F.col("band"), sig_slice)
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+    )
     return signatures.select(
         F.col(id_col),
         F.col("signature"),
@@ -355,8 +342,7 @@ def minhash_candidate_pairs(
     id_col: str = "doc_id",
     bands: int = 16,
     min_jaccard: float = 0.0,
-    materialize: bool = True,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs agreeing on any band become a candidate pair.
@@ -365,7 +351,7 @@ def minhash_candidate_pairs(
     fraction of matching signature components. The band equi-join is the
     scale move — buckets shuffle by (band, band_hash), never all-pairs.
 
-    ``materialize`` persists the signature table (MEMORY_AND_DISK): it is
+    The signature table is persisted (MEMORY_AND_DISK): it is
     referenced three times (banding + both sides of the estimate join), and
     recomputing the shingle/hash pass per reference costs far more than
     storing ~(8 + 8*num_perm) bytes/doc — at 100 TB this is the standard
@@ -382,8 +368,7 @@ def minhash_candidate_pairs(
     pairs lost to a capped bucket are overwhelmingly exact dups already
     handled upstream. None (default) disables the guard.
     """
-    if materialize:
-        signatures = signatures.persist()
+    signatures = signatures.persist()
     # Narrow-shuffle design for the 100 TB case: the banded self-join carries
     # only (id, band, band_hash) — 24 bytes/row — never the signatures
     # themselves; signatures are joined back exactly once per surviving
@@ -437,7 +422,7 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
     shingle_n: int | None = None,
 ) -> DataFrame:
     """SimHash over whitespace tokens (unweighted), or over word n-gram
@@ -456,12 +441,12 @@ def simhash(
     semantics exactly (distinct; short docs fall back to one full-text
     shingle) so an external oracle replays them.
 
-    Hash width follows ``hash_fn``: 64 bits for "xxhash64", 60 bits for
-    "md5" (``md5_long60`` — the widest md5 prefix that fits a signed long
-    in every engine; pass ``n_bits=60`` to ``simhash_candidate_pairs``).
-    A document with no tokens hashes to 0 in either family.
+    The hash is 60 bits wide (``md5_long60`` — the widest md5 prefix that
+    fits a signed long in every engine), matching the ``n_bits`` default of
+    ``simhash_candidate_pairs``. A document with no tokens hashes to 0.
     """
-    n_bits = 64 if hash_fn == "xxhash64" else 60
+    _check_hash_fn(hash_fn)
+    n_bits = _SIMHASH_BITS
     # Plan shape mirrors minhash_signatures: explode tokens once and
     # evaluate the per-bit votes as flat codegen'd aggregate columns —
     # higher-order folds execute interpreted per element with no
@@ -486,15 +471,9 @@ def simhash(
         featured = toks.select(
             F.col(id_col), F.explode_outer(feats).alias("_t")
         )
-    exploded = featured.select(
-        F.col(id_col),
-        # NULL guard matters for xxhash64, which hashes NULL to the seed
-        # hash instead of propagating NULL — without it an empty doc would
-        # vote once per bit instead of not at all
-        F.when(
-            F.col("_t").isNotNull(), _base_hash(F.col("_t"), hash_fn)
-        ).alias("_h"),
-    )
+    # md5_long60 propagates NULL, so an empty doc's one NULL token row
+    # votes on nothing
+    exploded = featured.select(F.col(id_col), md5_long60(F.col("_t")).alias("_h"))
     # The n_bits per-bit votes AND the bit-reassembly are ONE SQL string
     # parsed JVM-side (the minhash_signatures lesson, r4): composing the
     # 60 vote aggregates plus the 60-term OR chain Column-by-Column cost
@@ -516,14 +495,13 @@ def simhash_candidate_pairs(
     hashes: DataFrame,
     id_col: str = "doc_id",
     bands: int = 4,
-    n_bits: int = 64,
+    n_bits: int = _SIMHASH_BITS,
     max_bucket: int | None = None,
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-dup candidates: docs sharing any (n_bits/bands)-bit band of
     their SimHash (catches pairs within small hamming distance), plus
-    exact hamming. ``n_bits`` must match the ``simhash`` hash family
-    (64 for xxhash64, 60 for md5).
+    exact hamming. ``n_bits`` must match the ``simhash`` width (60).
 
     The signature table is PERSISTED here (``cache_registry`` contract,
     see ``prefix_jaccard_pairs``): both self-join sides — and the bucket
@@ -1234,7 +1212,7 @@ def incremental_minhash_candidates(
     id_col: str = "doc_id",
     bands: int = 16,
     min_jaccard: float = 0.0,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
     hist_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidates of a NEW batch against an existing corpus —

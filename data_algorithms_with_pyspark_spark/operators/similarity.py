@@ -1276,53 +1276,53 @@ def pq_train_codebook(
     spark = vecs.sparkSession
     try:
         for _ in range(max_iter):
-            # ROW-LOCAL packed argmin (round 11): the codebook is a single
-            # nested-array literal indexed by the row's subspace id; per
-            # (vid, s) row a transform computes pq_encode's exact grid/tie
-            # packing (floor(d2*1e12 + 0.5)*ksub + cid, min -> ties to the
-            # lower cid) with the identical index-order left-fold squared
-            # L2, and array_min replaces the per-(vid, s) aggregate. Each
-            # Lloyd iteration is ONE fused pass over the persisted
-            # subvector table — the previous shape paid a broadcast join,
-            # a (vid, s)-keyed exchange, and a join-back that re-shuffled
-            # the subvectors by (vid, s) every iteration.
-            cb_lit = F.expr(
-                "array("
-                + ",".join(
+            if use_literal:
+                # ROW-LOCAL packed argmin (round 11): the codebook is a single
+                # nested-array literal indexed by the row's subspace id; per
+                # (vid, s) row a transform computes pq_encode's exact grid/tie
+                # packing (floor(d2*1e12 + 0.5)*ksub + cid, min -> ties to the
+                # lower cid) with the identical index-order left-fold squared
+                # L2, and array_min replaces the per-(vid, s) aggregate. Each
+                # Lloyd iteration is ONE fused pass over the persisted
+                # subvector table — the previous shape paid a broadcast join,
+                # a (vid, s)-keyed exchange, and a join-back that re-shuffled
+                # the subvectors by (vid, s) every iteration.
+                cb_lit = F.expr(
                     "array("
                     + ",".join(
                         "array("
-                        + ",".join(f"{float(x)!r}D" for x in cw)
+                        + ",".join(
+                            "array("
+                            + ",".join(f"{float(x)!r}D" for x in cw)
+                            + ")"
+                            for cw in codebook[s]
+                        )
                         + ")"
-                        for cw in codebook[s]
+                        for s in range(m)
                     )
                     + ")"
-                    for s in range(m)
+                )  # ONE parsed SQL string (lit_double_matrix rationale)
+                cands = F.element_at(cb_lit, F.col("s") + 1)
+                packed_arr = F.transform(
+                    cands,
+                    lambda cv, c: F.floor(
+                        F.aggregate(
+                            F.zip_with(
+                                F.col("sv"), cv, lambda a, b: (a - b) * (a - b)
+                            ),
+                            F.lit(0.0),
+                            lambda acc, x: acc + x,
+                        )
+                        * F.lit(1e12)
+                        + F.lit(0.5)
+                    ).cast("long")
+                    * F.lit(ksub)
+                    + c,
                 )
-                + ")"
-            )  # ONE parsed SQL string (lit_double_matrix rationale)
-            cands = F.element_at(cb_lit, F.col("s") + 1)
-            packed_arr = F.transform(
-                cands,
-                lambda cv, c: F.floor(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("sv"), cv, lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    * F.lit(1e12)
-                    + F.lit(0.5)
-                ).cast("long")
-                * F.lit(ksub)
-                + c,
-            )
-            cid = (F.array_min(packed_arr) % ksub).cast("int")
-            # cid staged as an attribute BEFORE the generator — an inline
-            # expression next to posexplode is re-evaluated per exploded
-            # element (the clustering.kmeans_train lesson)
-            if use_literal:
+                cid = (F.array_min(packed_arr) % ksub).cast("int")
+                # cid staged as an attribute BEFORE the generator — an
+                # inline expression next to posexplode is re-evaluated per
+                # exploded element (the clustering.kmeans_train lesson)
                 staged = sub.select("s", cid.alias("cid"), "sv")
             else:
                 cents = spark.createDataFrame(

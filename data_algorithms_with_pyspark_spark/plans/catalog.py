@@ -7,6 +7,10 @@ DuckDB oracle SQL string computing the same result on the same parquet
 tables. The driver (and tests/test_catalog_oracle.py) run both sides and
 compare row counts, schemas, and order-insensitive value hashes.
 
+``all_queries()`` lists the catalog in registration order (``_QUERY_MODULES``
+import order, then decorator order within each module); that is its only
+order, and queries are always looked up by name.
+
 Cross-engine determinism rules used throughout the catalog:
 
 * every computed/aggregate column is aliased identically on both sides;
@@ -33,11 +37,7 @@ __all__ = ["CatalogQuery", "register", "all_queries", "get_query", "ts"]
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Module import order (registration order) is the catalog's BASE order;
-# _SAMPLE_PRIORITY below floats a per-round window to the front because
-# the external driver samples a ~50-query prefix each round. Every query
-# is identical under any order (flat registry); scripts/driver_sim.py
-# always verifies all of them.
+# Import order here is the catalog's registration order.
 _QUERY_MODULES = (
     "data_algorithms_with_pyspark_spark.plans.events",
     "data_algorithms_with_pyspark_spark.plans.extensions",
@@ -53,116 +53,6 @@ _QUERY_MODULES = (
     "data_algorithms_with_pyspark_spark.plans.suite",
 )
 
-# Queries floated to the FRONT of the catalog iteration order, ahead of
-# module registration order. The external driver samples a ~50-query
-# prefix each round; this list rotates per round so cumulative driver
-# attestation covers every catalog query (scripts/driver_sim.py always
-# verifies all of them regardless of order).
-_SAMPLE_PRIORITY = (
-    # Round 12 rotation (VERDICT r11 #2). Ordering rule (unchanged):
-    # queries whose code was TOUCHED by the r11/r12 optimizers first —
-    # so the driver's ~50-query sf0.01 window re-attests every rewrite —
-    # then the stalest re-attestation block (last green r7, from
-    # scripts/staleness.py over CORRECTNESS_r0{1..11}), alphabetical,
-    # minus names already in the touched block. No new rows this round
-    # (optimization round, no new features).
-    #
-    # Touched block (r11 ANN/trainer/sketch rewrites + r12's prefix-
-    # postings/simhash/session persists, bm25 row-local filter, trainer
-    # driver-argmax, literal/broadcast switch, single-collect ivf_pq):
-    "embedding_kmeans_assign",
-    "embedding_semdedup_prune",
-    "ivf_ann_topk",
-    "pq_ann_topk",
-    "pq_ann_trained_codebook",
-    "pq_recall_report",
-    "sq8_ann_topk",
-    "ivf_pq_ann_topk",
-    "ivf_pq_ann_persisted_index",
-    "ivf_pq_ann_incremental_index",
-    "ivf_pq_residual_ann_topk",
-    "ivf_pq_recall_report",
-    "doc_quality_classifier",
-    "doc_quality_classifier_eval",
-    "term_count_min_sketch",
-    "bloom_term_membership",
-    "bm25_search_topk",
-    "bpe_learned_merges",
-    "bpe_vocab_segmentation",
-    "wordpiece_learned_merges",
-    "wordpiece_greedy_segmentation",
-    "unigram_lm_vocab",
-    "unigram_lm_segmentation",
-    "tokenizer_compression_comparison",
-    "prefix_jaccard_near_dups",
-    "prefix_jaccard_guarded_near_dups",
-    "dedup_degeneracy_preflight",
-    "simhash_near_dup_candidates",
-    "simhash_guarded_near_dups",
-    "concurrent_session_pairs",
-    "minhash_near_dup_candidates",
-    "auto_routed_near_dups",
-    # r7-stale block (staleness.py "last green r7"), alphabetical, minus
-    # the touched names above; the window cut lands inside this block
-    # and the remainder leads the r13 rotation.
-    "ann_cosine_topk",
-    "ann_knn_join_bruteforce",
-    "bpe_pair_counts",
-    "clicks_last_purchase_asof",
-    "customer_feature_engineering",
-    "dedup_exact_groups",
-    "doc_fingerprints",
-    "doc_language_id",
-    "doc_quality_scores",
-    "doc_tfidf_top_terms",
-    "doc_token_counts",
-    "documents_global_row_index",
-    "documents_leakage_safe_split",
-    "documents_per_source_sample",
-    "documents_vocab_encode",
-    "embedding_cosine_near_dups",
-    "embedding_label_centroids",
-    "event_type_stats",
-    "event_value_percentiles",
-    "events_cohort_retention",
-    "events_daily_psi_monitor",
-    "events_funnel_stages",
-    "events_hourly_gap_fill",
-    "events_hourly_windows",
-    "events_props_extraction",
-    "events_seasonal_anomalies",
-    "events_selfjoin_explosion_audit",
-    "events_sessionization",
-    "events_sliding_windows",
-    "events_user_running_totals",
-    "events_value_histogram",
-    "events_value_outliers",
-    "events_value_stats",
-    "events_value_trend",
-    "orders_compaction_audit",
-    "streaming_cdc_sink_parity",
-    "streaming_hourly_windows_parity",
-    "streaming_session_windows_parity",
-    "streaming_sliding_windows_parity",
-    "streaming_stateful_totals_parity",
-    "streaming_stream_join_parity",
-    "sum_quantity_by_linestatus",
-    "top_customers_by_balance",
-    "tpch_suite_rowcounts",
-    "word_count",
-)
-
-# Queries pinned to the very END of catalog iteration order so the
-# driver's ~50-query sample window never lands on them again:
-# approx_distinct_users_hll is the one row with no DuckDB oracle
-# (Spark's built-in HLL internals are not replayable in another
-# engine), so every window that samples it records a spurious-looking
-# `err: no_oracle` (VERDICT r10 #6). It stays in the catalog — the
-# hostile driver_sim still runs its rows-only check every round, its
-# exact twin brackets it, and the md5-lane portable_hll_distinct_users
-# carries the full value oracle for the estimate itself.
-_SAMPLE_LAST = ("approx_distinct_users_hll",)
-
 _REGISTRY: dict[str, "CatalogQuery"] = {}
 _LOADED = False
 
@@ -173,7 +63,6 @@ class CatalogQuery:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None -> driver does a rows-only check
     description: str = ""
-    bench: bool = False  # include in bench.py's headline set
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
@@ -181,13 +70,12 @@ def register(
     name: str,
     oracle: str | None = None,
     description: str = "",
-    bench: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate catalog query {name!r}")
-        _REGISTRY[name] = CatalogQuery(name, fn, oracle, description, bench, tags)
+        _REGISTRY[name] = CatalogQuery(name, fn, oracle, description, tags)
         return fn
 
     return deco
@@ -202,19 +90,9 @@ def _load() -> None:
 
 
 def all_queries() -> dict[str, CatalogQuery]:
+    """Every registered query by name, in registration order."""
     _load()
-    ordered = {
-        name: _REGISTRY[name] for name in _SAMPLE_PRIORITY if name in _REGISTRY
-    }
-    ordered.update(
-        (name, q)
-        for name, q in _REGISTRY.items()
-        if name not in _SAMPLE_LAST
-    )
-    ordered.update(
-        (name, _REGISTRY[name]) for name in _SAMPLE_LAST if name in _REGISTRY
-    )
-    return ordered
+    return dict(_REGISTRY)
 
 
 def get_query(name: str) -> CatalogQuery:

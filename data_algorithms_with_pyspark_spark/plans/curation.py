@@ -52,7 +52,6 @@ _STOPS_SQL = "['the', 'and', 'of', 'to', 'a', 'in', 'is', 'that']"
 
 @register(
     "doc_gopher_quality_rules",
-    bench=True,
     tags=("text", "quality", "pipeline"),
     description="Gopher-rule document filter: per-rule 0/1 flags (word "
     "count, mean word length, stopword presence, distinct-word ratio) + "
@@ -246,7 +245,6 @@ def orders_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_hourly_daily_rollup",
-    bench=True,
     tags=("events", "timeseries", "rollup", "scale"),
     description="Hierarchical continuous-aggregate shape: hourly event "
     "rollup re-aggregated to daily (counts, fixed-point value sums, "
@@ -486,7 +484,6 @@ _EWMA_BETA = 1.0 - _EWMA_ALPHA  # NOT 0.7 in f64; repr-shared with the oracle
 
 @register(
     "events_value_ewma",
-    bench=True,
     tags=("events", "timeseries", "pandas-udf"),
     description=f"Per-user EWMA (alpha={_EWMA_ALPHA}) of event values — the "
     "one genuinely recursive operator, Arrow applyInPandas fold vs a "
@@ -534,7 +531,6 @@ _SEMDEDUP_CLUSTERS = 16
 
 @register(
     "embedding_semdedup_prune",
-    bench=True,
     tags=("dedup", "similarity", "embeddings"),
     description=f"SemDeDup-style semantic dedup (arXiv:2303.09540): nearest-"
     f"centroid clustering ({_SEMDEDUP_CLUSTERS} lists) then within-cluster "
@@ -592,7 +588,6 @@ def embedding_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_char_lm_scores",
-    bench=True,
     tags=("text", "quality"),
     description="Per-doc cross-entropy under a corpus-trained character-"
     "bigram LM — the KenLM-perplexity quality-filter shape (CCNet, Wenzek "
@@ -770,7 +765,6 @@ _BOILER_MIN_DOCS = 3
 
 @register(
     "doc_boilerplate_ngrams",
-    bench=True,
     tags=("text", "quality", "dedup"),
     description=f"Cross-document boilerplate: fraction of each doc's distinct "
     f"word {_BOILER_N}-grams recurring in >= {_BOILER_MIN_DOCS} docs — the "
@@ -814,7 +808,6 @@ _CHUNK_STRIDE = 12
 
 @register(
     "doc_sequence_chunks",
-    bench=True,
     tags=("packing", "text"),
     description=f"Tokenize-and-chunk into {_CHUNK_TOKENS}-token windows, "
     f"stride {_CHUNK_STRIDE} — documents to model-ready overlapping training "
@@ -854,7 +847,6 @@ _NORMALIZED_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 @register(
     "incremental_dedup_new_docs",
-    bench=True,
     tags=("dedup", "curation", "incremental"),
     description="Cross-snapshot incremental dedup: the daily-ingest shape — "
     "new batch (docs hashed into the 1/8 'arriving' slice) anti-joined on "
@@ -1151,7 +1143,6 @@ def _kmeans_oracle() -> str:
 
 @register(
     "embedding_kmeans_assign",
-    bench=True,
     tags=("similarity", "clustering", "iterative"),
     description=f"Trained k-means (Lloyd's, k={_KMEANS_K}, "
     f"{_KMEANS_ITERS} iterations) over the embeddings corpus with a fully "
@@ -1184,7 +1175,6 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "documents_global_row_index",
-    bench=True,
     tags=("ordering", "scale-pattern"),
     description="Contiguous 0-based global row numbers under a total order "
     "(source, doc_id) WITHOUT a single-partition window — range exchange + "
@@ -1247,7 +1237,6 @@ def documents_per_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_near_dup_candidates",
-    bench=True,
     tags=("dedup", "incremental", "lsh"),
     description="Cross-snapshot NEAR-dup: the daily increment's MinHash "
     "bands equi-join the history's banded index only — history x history "
@@ -1267,19 +1256,16 @@ def incremental_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(
-        docs, num_perm=64, shingle_n=3, hash_fn="md5"
-    ).persist()
+    sigs = minhash_signatures(docs, num_perm=64, shingle_n=3).persist()
     new_sigs = sigs.where(F.col("doc_id") % 8 == 0)
     hist_sigs = sigs.where(F.col("doc_id") % 8 != 0)
     return incremental_minhash_candidates(
-        new_sigs, hist_sigs, bands=16, min_jaccard=0.3, hash_fn="md5"
+        new_sigs, hist_sigs, bands=16, min_jaccard=0.3
     )
 
 
 @register(
     "incremental_near_dup_persisted_index",
-    bench=True,
     tags=("dedup", "incremental", "lsh", "bucketed"),
     description="Incremental near-dup against a PERSISTED band index: the "
     "history's (doc_id, band, band_hash) rows are written once as a table "
@@ -1324,7 +1310,6 @@ def incremental_near_dup_persisted_index(
             docs.where(F.col("doc_id") % 8 != 0),
             num_perm=64,
             shingle_n=3,
-            hash_fn="md5",
         )
         # repartition on the bucket key first: without it every write task
         # emits a file per bucket (tasks x buckets tiny files); with it
@@ -1339,9 +1324,7 @@ def incremental_near_dup_persisted_index(
     hist_sigs = spark.table(sig_tbl)
     if not spark.catalog.tableExists(idx):
         write_bucketed_table(
-            minhash_bands(hist_sigs, 16, hash_fn="md5").repartition(
-                16, F.col("band_hash")
-            ),
+            minhash_bands(hist_sigs, 16).repartition(16, F.col("band_hash")),
             idx,
             bucket_cols=("band_hash",),
             num_buckets=16,
@@ -1354,14 +1337,12 @@ def incremental_near_dup_persisted_index(
         docs.where(F.col("doc_id") % 8 == 0),
         num_perm=64,
         shingle_n=3,
-        hash_fn="md5",
     ).persist()
     return incremental_minhash_candidates(
         new_sigs,
         hist_sigs,
         bands=16,
         min_jaccard=0.3,
-        hash_fn="md5",
         hist_bands=spark.table(idx),
     )
 
@@ -1506,7 +1487,6 @@ def _bpe_segmentation_sql(n_merges: int, top_n: int) -> str:
 
 @register(
     "bpe_learned_merges",
-    bench=True,
     tags=("text", "tokenizer", "iterative"),
     description=f"Full BPE vocabulary training, {_BPE_MERGES} merge rounds "
     "(operators/bpe.py): corpus collapses once to (word, freq); each round "
@@ -1720,7 +1700,6 @@ def _unigram_segmentation_sql(iters: int, top_n: int) -> str:
 
 @register(
     "unigram_lm_vocab",
-    bench=True,
     tags=("text", "tokenizer", "iterative"),
     description=f"Unigram-LM (SentencePiece-style) tokenizer training, "
     f"{_UNIGRAM_ITERS} hard-EM rounds (operators/unigram.py): substring "
@@ -2169,7 +2148,6 @@ def _wordpiece_greedy_sql(n_merges: int, top_n: int) -> str:
 
 @register(
     "wordpiece_learned_merges",
-    bench=True,
     tags=("text", "tokenizer", "iterative"),
     description=f"WordPiece (BERT-tokenizer) vocabulary training, "
     f"{_WORDPIECE_MERGES} merge rounds (operators/wordpiece.py): each "
@@ -2486,7 +2464,6 @@ _CMS_WIDTH = 256
 
 @register(
     "term_count_min_sketch",
-    bench=True,
     tags=("sketch", "text"),
     description=f"Count-min sketch ({_CMS_ROWS}x{_CMS_WIDTH} md5-hashed "
     "cells) over corpus terms, read back for the top-30 true terms — "
@@ -2587,7 +2564,6 @@ _KNN_K = 3
 
 @register(
     "ann_knn_join_bruteforce",
-    bench=True,
     tags=("similarity", "knn"),
     description=f"Batch exact k-NN join: top-{_KNN_K} cosine neighbors for "
     f"each of {_KNN_QUERIES} query vectors — broadcast query batch, corpus "
@@ -2689,7 +2665,6 @@ _RERANK_K = 5
 
 @register(
     "rerank_topk",
-    bench=True,
     tags=("similarity", "retrieval", "pandas-udf"),
     description=f"Two-stage retrieval: exact top-{_RERANK_CAND} cosine "
     f"candidates per query, reranked to top-{_RERANK_K} by the Arrow-batched "
@@ -2767,7 +2742,6 @@ _FUZZY_SHINGLES_SQL = (
 
 @register(
     "part_name_similarity_join",
-    bench=True,
     tags=("join", "fuzzy", "dedup"),
     description=f"Entity-resolution fuzzy join: char-trigram Jaccard >= "
     f"{_FUZZY_THRESHOLD} matches between the DISTINCT part names of two "
@@ -2839,7 +2813,6 @@ _ENCODE_HEAD = 20
 
 @register(
     "documents_vocab_encode",
-    bench=True,
     tags=("text", "tokenizer"),
     description=f"Apply a trained vocabulary at scale: rank the top "
     f"{_ENCODE_VOCAB_K} terms into ids, broadcast the vocab, encode every "
@@ -2937,7 +2910,6 @@ _DUPSPAN_W = 8  # window tokens; shared literal with the oracle SQL below
 
 @register(
     "doc_duplicated_spans",
-    bench=True,
     tags=("dedup", "curation", "text"),
     description="Exact-substring duplication profile (Lee et al. 2022 "
     "arXiv:2107.06499 shape): every overlapping 8-token window hashed "
@@ -3030,7 +3002,6 @@ def _bloom_pos_sql(expr: str) -> str:
 
 @register(
     "bloom_term_membership",
-    bench=True,
     tags=("sketch", "curation"),
     description="Bloom-filter membership audit: filter built over the "
     "benchmark slice's distinct word bigrams (md5-lane bit positions), "
@@ -3261,7 +3232,6 @@ def _lr_eval_oracle_sql() -> str:
 
 @register(
     "doc_quality_classifier",
-    bench=True,
     tags=("ml", "curation", "iterative"),
     description="Trains a hashed-feature logistic-regression quality "
     "classifier (fasttext-filter shape) by full-batch gradient descent — "
@@ -3331,7 +3301,6 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_hourly_agg_merge",
-    bench=True,
     tags=("events", "rollup", "incremental", "scale"),
     description="Incremental view maintenance: stored hourly aggregate "
     "(7/8 history) merged with the new batch's partial aggregate (1/8 "

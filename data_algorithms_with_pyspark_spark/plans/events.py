@@ -20,7 +20,6 @@ from data_algorithms_with_pyspark_spark.sources.readers import load_table
 
 @register(
     "events_hourly_windows",
-    bench=True,
     tags=("events", "window"),
     description="Tumbling 1-hour event-time windows per event type",
     oracle="""
@@ -45,7 +44,6 @@ def events_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_sessionization",
-    bench=True,
     tags=("events", "window"),
     description="Gap-based sessionization (30 min) via lag + cumulative sum",
     oracle="""
@@ -75,7 +73,6 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_user_running_totals",
-    bench=True,
     tags=("events", "window"),
     description="Per-user running event count + value sum (analytic frame)",
     oracle="""
@@ -103,7 +100,6 @@ def events_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_props_extraction",
-    bench=True,
     tags=("events", "json"),
     description="JSON prop extraction from the props string column",
     oracle="""
@@ -126,7 +122,6 @@ def events_props_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "clicks_last_purchase_asof",
-    bench=True,
     tags=("events", "asof-join"),
     description="As-of join: each click paired with the user's most recent "
     "prior-or-same-instant purchase (operators/asof.py; one keyed sort-merge "
@@ -167,7 +162,6 @@ def clicks_last_purchase_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_inter_arrival_stats",
-    bench=True,
     tags=("events", "window", "lag"),
     description="Per-type avg/max gap between a user's consecutive events (lag)",
     oracle="""
@@ -214,7 +208,6 @@ def events_inter_arrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_rolling_hour_avg",
-    bench=True,
     tags=("events", "window", "timeseries"),
     description="Per-user trailing-1-hour rolling avg/count at each event "
     "(event-time RANGE frame)",
@@ -279,7 +272,6 @@ def events_rolling_hour_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_hourly_gap_fill",
-    bench=True,
     tags=("events", "window", "timeseries"),
     description="Dense hourly grid per event type: zero-filled counts + "
     "last-observation-carried-forward sums (sequence+explode, LOCF window)",
@@ -398,7 +390,6 @@ def linestatus_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_sliding_windows",
-    bench=True,
     tags=("events", "window"),
     description="Sliding event-time windows (1h width, 30min slide) per "
     "event type via the built-in window() operator — each event lands in "
@@ -446,7 +437,6 @@ def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_value_outliers",
-    bench=True,
     tags=("events", "stats", "quality"),
     description="Anomaly detection: events whose value is > 3 sample-stddevs "
     "from their event_type mean — per-group stats broadcast back over the "
@@ -487,7 +477,6 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_value_trend",
-    bench=True,
     tags=("events", "stats", "functions"),
     description="Per-type linear trend of value over time: regr_slope / "
     "regr_intercept / regr_r2 built-in aggregates (JVM-side; one hash "
@@ -522,7 +511,6 @@ def events_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_funnel_stages",
-    bench=True,
     tags=("events", "funnel"),
     description="Ordered conversion funnel signup->view->click->purchase: "
     "per-user stage timestamps via ONE sort+fold aggregate (no per-stage "
@@ -602,7 +590,6 @@ def events_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_cohort_retention",
-    bench=True,
     tags=("events", "window"),
     description="Cohort retention triangle: users grouped by first-active "
     "day, distinct active users per (cohort_day, day_offset)",
@@ -670,7 +657,6 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_seasonal_anomalies",
-    bench=True,
     tags=("events", "stats", "quality", "window"),
     description="Seasonal anomaly detection: per-(dow, hour) baseline "
     "profile (mean/stddev of value) computed once and broadcast back over "
@@ -737,7 +723,6 @@ def events_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "concurrent_session_pairs",
-    bench=True,
     tags=("events", "join", "range"),
     description="Cross-user session concurrency: gap-based sessions as "
     "[start, end] micro-intervals, interval-overlap self-joined via the "
@@ -836,7 +821,6 @@ _PATH_TOP = 20
 
 @register(
     "user_journey_path_ngrams",
-    bench=True,
     tags=("events", "window", "text"),
     description=f"User-journey mining: top-{_PATH_TOP} {_PATH_N}-step "
     "event-type paths within per-(user, day) journeys (ordered collect "
@@ -1290,7 +1274,6 @@ _FUNNEL_GAP_MIN = 30
 
 @register(
     "session_funnel_report_pipeline",
-    bench=True,
     tags=("pipeline", "events", "window", "funnel"),
     description=f"END-TO-END behavioral composite (the events-side twin of "
     f"corpus_train_ready_pipeline): {_FUNNEL_GAP_MIN}-min gap sessionization "

@@ -3,10 +3,11 @@ multimodal plumbing (BASELINE.json: LLM-data-pipeline operators).
 
 Oracle policy: everything SQL-expressible gets a DuckDB oracle built from
 the SAME constants (marker vocabularies, shingle sizes, thresholds) via
-f-strings, so Spark and oracle cannot drift. MinHash/SimHash/SRP-LSH use
-xxhash64, which DuckDB doesn't have -> rows-only checks (the exact-Jaccard
-and exact-cosine brute-force baselines are the oracle-checked ground truth
-those approximations are validated against in tests).
+f-strings, so Spark and oracle cannot drift. MinHash/SimHash hash with
+md5_long60 and SRP-LSH embeds its seeded hyperplanes as literals, so both
+replay in DuckDB (plans/lsh_oracles.py, the SRP fragments below); the
+exact-Jaccard and exact-cosine brute-force baselines are the ground truth
+those approximations are validated against in tests.
 """
 
 from __future__ import annotations
@@ -180,7 +181,6 @@ def srp_pairs_sql(
 
 @register(
     "dedup_exact_groups",
-    bench=True,
     tags=("dedup",),
     description="Exact dedup: md5(normalized text) hash-groupBy, keep min id",
     oracle=f"""
@@ -418,7 +418,6 @@ def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "prefix_jaccard_near_dups",
-    bench=True,
     tags=("dedup", "similarity-join"),
     description=f"EXACT word-{_NGRAM_N}-gram Jaccard pairs >= "
     f"{_PREFIX_JACCARD_THRESHOLD} via PPJoin-style prefix filtering — "
@@ -531,14 +530,12 @@ def dedup_degeneracy_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(
-        docs, num_perm=64, shingle_n=_NGRAM_N, hash_fn="md5"
-    )
+    sigs = minhash_signatures(docs, num_perm=64, shingle_n=_NGRAM_N)
     # Exact LONG arithmetic (DIV), matching the oracle's hugeint `//`:
     # float `/ 2` loses integer exactness past 2^53 (postings > ~9.5e7).
     pair_bound = F.expr("c * (c - 1) DIV 2")
     mh = (
-        minhash_bands(sigs, 16, hash_fn="md5")
+        minhash_bands(sigs, 16)
         .groupBy("band", "band_hash")
         .agg(F.count("*").alias("c"))
         .agg(
@@ -1327,11 +1324,9 @@ def auto_routed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "re-attest the oracle against the new plan before "
                 "trusting the cross-engine gate"
             )
-        sigs = minhash_signatures(
-            docs, num_perm=mh.num_perm, shingle_n=_NGRAM_N, hash_fn="md5"
-        )
+        sigs = minhash_signatures(docs, num_perm=mh.num_perm, shingle_n=_NGRAM_N)
         cand = minhash_candidate_pairs(
-            sigs, bands=mh.bands, min_jaccard=0.0, hash_fn="md5"
+            sigs, bands=mh.bands, min_jaccard=0.0
         ).select("id_1", "id_2")
         # One persisted shingle table feeds BOTH verification sides
         # (same re-tokenize trade as prefix_jaccard_pairs' internal
@@ -1431,7 +1426,6 @@ def embedding_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "minhash_near_dup_candidates",
-    bench=True,
     tags=("dedup", "lsh"),
     description="MinHash(64) + 16-band LSH candidate pairs with est. Jaccard "
     "(scale path: band equi-join, no all-pairs). md5-derived hashes -> the "
@@ -1440,13 +1434,12 @@ def embedding_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, num_perm=64, shingle_n=_NGRAM_N, hash_fn="md5")
-    return minhash_candidate_pairs(sigs, bands=16, min_jaccard=0.1, hash_fn="md5")
+    sigs = minhash_signatures(docs, num_perm=64, shingle_n=_NGRAM_N)
+    return minhash_candidate_pairs(sigs, bands=16, min_jaccard=0.1)
 
 
 @register(
     "simhash_near_dup_candidates",
-    bench=True,
     tags=("dedup", "lsh"),
     description="60-bit SimHash banded candidates with hamming distance "
     "(md5-derived token hashes -> full cross-engine value oracle)",
@@ -1454,14 +1447,11 @@ def minhash_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_candidate_pairs(
-        simhash(docs, hash_fn="md5"), n_bits=60
-    ).where(F.col("hamming") <= 15)
+    return simhash_candidate_pairs(simhash(docs)).where(F.col("hamming") <= 15)
 
 
 @register(
     "srp_lsh_cosine_near_dups",
-    bench=True,
     tags=("dedup", "similarity", "lsh"),
     description=f"Cosine near-dups via banded sign-random-projection LSH "
     f"({_SRP_N_PLANES} planes, {_SRP_BANDS} bands): candidates from band "
@@ -1535,11 +1525,9 @@ def minhash_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = prefix_jaccard_pairs(
         docs, _PREFIX_JACCARD_THRESHOLD, shingle_n=_NGRAM_N
     ).select("id_1", "id_2")
-    sigs = minhash_signatures(
-        docs, num_perm=64, shingle_n=_NGRAM_N, hash_fn="md5"
-    )
+    sigs = minhash_signatures(docs, num_perm=64, shingle_n=_NGRAM_N)
     cands = minhash_candidate_pairs(
-        sigs, bands=16, min_jaccard=0.1, hash_fn="md5"
+        sigs, bands=16, min_jaccard=0.1
     ).select("id_1", "id_2")
     nt = truth.agg(F.count("*").alias("n_true"))
     nc = cands.agg(F.count("*").alias("n_candidates"))
@@ -1571,7 +1559,6 @@ def minhash_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_cosine_topk",
-    bench=True,
     tags=("similarity",),
     description=f"Exact cosine top-{_ANN_K} for query vec_id={_ANN_QUERY_ID} "
     "(broadcast query vector + TakeOrdered)",
@@ -1629,7 +1616,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_gram_covariance",
-    bench=True,
     tags=("similarity", "aggregate", "ml"),
     description="Exact fixed-point Gram matrix + first moments (PCA-prep "
     "second-moment pass; covariance numerator n*g - s_i*s_j is exact)",
@@ -1740,7 +1726,6 @@ def _pca_projection_oracle_sql(
 
 @register(
     "embedding_pca_projection",
-    bench=True,
     tags=("similarity", "ml", "iterative"),
     description="Distributed PCA: one-pass exact Gram scan -> driver-side "
     f"quantized power iteration ({_PCA_ITERS} its) -> distributed ordered-"
@@ -1783,7 +1768,6 @@ def embedding_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_token_counts",
-    bench=True,
     tags=("text",),
     description="Whitespace + BPE-ish subword token counts per document",
     oracle=f"""
@@ -1914,7 +1898,6 @@ def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_decoded_stats",
-    bench=True,
     tags=("multimodal", "pandas-udf"),
     description="REAL image decode over a corpus of valid 24-bit BMP files "
     "(pure-numpy parser in Arrow mapInPandas batches): dimensions + pixel "
@@ -2102,7 +2085,6 @@ def multimodal_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ivf_ann_topk",
-    bench=True,
     tags=("similarity", "ann"),
     description=f"IVF approximate top-{_ANN_K}: nearest-centroid inverted lists, "
     "4-of-16 probe, exact re-rank on candidates (operators/similarity.py:ivf_topk)",
@@ -2255,7 +2237,6 @@ _BM25_QT_VALUES = ", ".join(
 
 @register(
     "bm25_search_topk",
-    bench=True,
     tags=("text", "index", "search"),
     description=f"BM25 ranked retrieval: top-{_BM25_K} documents for each of "
     f"{len(_BM25_QUERIES)} keyword queries (k1={_BM25_K1}, b={_BM25_B}); "
@@ -2326,7 +2307,6 @@ _PQ_W = 8       # dims per subspace (embeddings are 64-d)
 
 @register(
     "pq_ann_topk",
-    bench=True,
     tags=("similarity", "ann", "sketch"),
     description=f"Product-quantization ANN top-{_ANN_K} (Jegou et al. 2011): "
     "64-float vectors compressed to 32-bit PQ codes (64x), asymmetric-"
@@ -3312,7 +3292,6 @@ _IVF_PQ_TOPK_CTES = f"""
 
 @register(
     "ivf_pq_ann_topk",
-    bench=True,
     tags=("similarity", "ann"),
     description=f"IVF-PQ ANN top-{_ANN_K}: coarse inverted lists prune the "
     "corpus to 4-of-16 probed lists, PQ/ADC integer-LUT scoring ranks "
@@ -3868,7 +3847,6 @@ def _ann_qv_and_probes(vecs, cent_vecs: list | None = None):
 
 @register(
     "ivf_pq_ann_persisted_index",
-    bench=True,
     tags=("similarity", "ann", "bucketed", "io"),
     description=f"IVF-PQ ANN top-{_ANN_K} against a PERSISTED index: PQ "
     "codes + coarse assignment written ONCE as a catalog table "
@@ -4465,7 +4443,6 @@ _SQ8_ENC_CTES = f"""
 
 @register(
     "sq8_ann_topk",
-    bench=True,
     tags=("similarity", "ann", "sketch"),
     description=f"Scalar-quantization (symmetric-int8 absmax) ANN top-{_ANN_K} "
     "by approximate inner product: 64-float vectors compressed 4x to int8 "
@@ -4639,8 +4616,7 @@ def simhash_guarded_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_candidate_pairs(
-        simhash(docs, hash_fn="md5"),
-        n_bits=60,
+        simhash(docs),
         max_bucket=_SIMHASH_GUARD_BUCKET,
     ).where(F.col("hamming") <= 15)
 
@@ -4738,5 +4714,5 @@ def simhash_shingle_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_candidate_pairs(
-        simhash(docs, hash_fn="md5", shingle_n=3), n_bits=60
+        simhash(docs, shingle_n=3)
     ).where(F.col("hamming") <= 15)

@@ -1,6 +1,6 @@
 """DuckDB oracle SQL builders for the md5-based MinHash/SimHash family.
 
-The Spark operators (operators/dedup.py with ``hash_fn="md5"``) hash via
+The Spark operators (operators/dedup.py) hash via ``md5_long60`` =
 ``conv(substring(md5(x), 1, 15), 16, 10)`` — a construction any engine
 reproduces bit-for-bit. These builders emit DuckDB SQL replaying the
 IDENTICAL pipeline: tokenization, shingling, base hash, the seeded
@@ -94,8 +94,8 @@ def minhash_pairs_sql(
     shingle_n: int = 3,
     seed: int = 42,
 ) -> str:
-    """Oracle for minhash_candidate_pairs(hash_fn="md5"): (id_1, id_2,
-    est_jaccard) with id_1 < id_2."""
+    """Oracle for minhash_candidate_pairs: (id_1, id_2, est_jaccard) with
+    id_1 < id_2."""
     return f"""
         WITH {_sig_ctes(num_perm, shingle_n, seed)},
         {_bands_cte(num_perm, bands)},
@@ -213,7 +213,7 @@ def simhash_pairs_sql(
     max_bucket: int | None = None,
     shingle_n: int | None = None,
 ) -> str:
-    """Oracle for simhash(hash_fn="md5") + simhash_candidate_pairs(n_bits=60):
+    """Oracle for simhash + simhash_candidate_pairs(n_bits=60):
     (id_1, id_2, hamming) for banded candidates within ``max_hamming``.
     Docs with no tokens hash to 0 (the LEFT JOIN/coalesce mirrors Spark's
     fold over an empty token array). ``max_bucket`` replays the operator's

@@ -102,7 +102,6 @@ def _lang_scores_sql() -> str:
 
 @register(
     "corpus_curation_pipeline",
-    bench=True,
     tags=("pipeline", "text", "dedup"),
     description=f"Curation: lang='{_CURATION_LANG}' + quality>={_QUALITY_THRESHOLD} "
     "+ exact dedup (keep min doc_id), one pass + one hash-agg",
@@ -202,10 +201,8 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns verified pairs into clusters. Returns (doc_id, cluster_id,
     cluster_size) for documents in clusters of size >= 2."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, num_perm=64, shingle_n=3, hash_fn="md5")
-    candidates = minhash_candidate_pairs(
-        sigs, bands=16, min_jaccard=0.1, hash_fn="md5"
-    )
+    sigs = minhash_signatures(docs, num_perm=64, shingle_n=3)
+    candidates = minhash_candidate_pairs(sigs, bands=16, min_jaccard=0.1)
     verified = ngram_jaccard_pairs(
         docs, _NEAR_DUP_JACCARD, shingle_n=3, candidates=candidates
     )
@@ -701,7 +698,6 @@ _SHINGLES_SQL = f"""
 
 @register(
     "training_shard_packing",
-    bench=True,
     tags=("llm-pipeline", "packing", "window"),
     description=f"Greedy sequence packing: documents -> {_PACK_BUDGET}-token "
     f"shards per (source, doc_id % {_PACK_BUCKETS}) group via exclusive "
@@ -799,7 +795,6 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_quality_report",
-    bench=True,
     tags=("quality", "pipeline"),
     description="Data-quality gate over orders/lineitem/customer: null, "
     "range, business-rule, duplicate-key, and referential-integrity checks "
@@ -885,7 +880,6 @@ _V2_COSINE_THRESHOLD = 0.35  # same tail threshold as embedding_cosine_near_dups
 
 @register(
     "corpus_curation_v2",
-    bench=True,
     tags=("pipeline", "text", "dedup", "similarity", "lsh"),
     description=f"Multimodal curation: per-doc keep/drop verdict fusing "
     f"quality>={_QUALITY_THRESHOLD}, exact content-hash dedup, and "
@@ -1156,7 +1150,6 @@ _E2E_TEST_DEN = 5
 
 @register(
     "corpus_train_ready_pipeline",
-    bench=True,
     tags=("pipeline", "llm-pipeline", "text", "dedup", "packing"),
     description=f"END-TO-END corpus preparation: language/quality curation "
     f"-> exact content-hash dedup (window top-1) -> leakage-safe "

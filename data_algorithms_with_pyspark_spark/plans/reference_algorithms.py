@@ -65,7 +65,6 @@ def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "word_count",
-    bench=True,
     tags=("reference", "text"),
     description="Word count over documents.text (rdd_transformations_overview.py:27-37)",
     oracle="""
@@ -208,7 +207,6 @@ def event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degrees",
-    bench=True,
     tags=("graph",),
     description="In/out/total degree via two aggs + full outer join + fillna "
     "(graph_basics.py:45-62, flight_analysis.py:48-58)",

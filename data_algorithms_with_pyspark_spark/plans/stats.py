@@ -437,7 +437,6 @@ def customer_balance_window_bounds(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "event_value_sampled_quantiles",
-    bench=True,
     tags=("stats", "sketch", "events"),
     description="Bounded-memory quantile estimation: deterministic 1/8 "
     "md5 sample's nearest-rank p50/p95 vs the exact full-data quantiles "

@@ -34,7 +34,6 @@ def _revenue():
 
 @register(
     "q1_pricing_summary",
-    bench=True,
     tags=("relational", "aggregate"),
     description="TPC-H Q1: scan-heavy multi-aggregate groupBy over lineitem",
     oracle="""
@@ -84,7 +83,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    bench=True,
     tags=("relational", "join", "topk"),
     description="TPC-H Q3: 3-way join, grouped revenue, deterministic top-10",
     oracle="""
@@ -126,7 +124,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_local_supplier_volume",
-    bench=True,
     tags=("relational", "join"),
     description="TPC-H Q5: 6-way join with broadcast dims, revenue by nation",
     oracle="""
@@ -177,7 +174,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q6_forecast_revenue",
-    bench=True,
     tags=("relational", "filter"),
     description="TPC-H Q6: pure pushed-down filter + single aggregate",
     oracle="""
@@ -208,7 +204,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q10_returned_items",
-    bench=True,
     tags=("relational", "join", "topk"),
     description="TPC-H Q10: returned-item revenue by customer, top 20",
     oracle="""

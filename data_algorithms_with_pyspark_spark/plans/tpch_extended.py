@@ -177,7 +177,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q9_nation_profit",
-    bench=True,
     tags=("relational", "join"),
     description="TPC-H Q9 shape: widget-part revenue by supplier nation and year",
     oracle=f"""

@@ -25,9 +25,15 @@ __all__ = ["get_spark", "stop_spark"]
 
 def _default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus:
-        return max(2, int(cpus))
-    return max(2, os.cpu_count() or 2)
+    if not cpus:
+        return max(2, os.cpu_count() or 2)
+    try:
+        n = int(cpus)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}")
+    return max(2, n)
 
 
 def get_spark(

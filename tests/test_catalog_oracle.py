@@ -69,43 +69,3 @@ def test_empty_at_smoke_queries_verify_at_sf001(spark, name):
         pytest.skip("rows-only query")
     con = make_duckdb(SF_CORRECTNESS)
     compare_spark_duckdb(q.fn(spark, SF_CORRECTNESS), con, q.oracle)
-
-
-def test_sample_priority_names_exist():
-    """A typo'd name in _SAMPLE_PRIORITY silently drops out of the
-    driver's sample window (all_queries skips unknown names) — the
-    rotation would burn a slot on nothing. Fail loudly instead."""
-    from data_algorithms_with_pyspark_spark.plans.catalog import (
-        _SAMPLE_PRIORITY,
-        all_queries,
-    )
-
-    qs = all_queries()
-    missing = [n for n in _SAMPLE_PRIORITY if n not in qs]
-    assert not missing, f"_SAMPLE_PRIORITY names not in registry: {missing}"
-    assert len(set(_SAMPLE_PRIORITY)) == len(_SAMPLE_PRIORITY), "duplicates"
-
-
-def test_sample_last_pins_no_oracle_row_out_of_the_window():
-    """approx_distinct_users_hll (the one rows-only row) must never
-    land in the driver's ~50-query sample prefix again (VERDICT r10
-    #6): _SAMPLE_LAST pins it to the very end of catalog order."""
-    from data_algorithms_with_pyspark_spark.plans.catalog import (
-        _SAMPLE_LAST,
-        all_queries,
-    )
-
-    qs = all_queries()
-    names = list(qs)
-    missing = [n for n in _SAMPLE_LAST if n not in qs]
-    assert not missing, f"_SAMPLE_LAST names not in registry: {missing}"
-    for n in _SAMPLE_LAST:
-        assert n not in names[:50], f"{n} inside the sample window"
-    assert names[-len(_SAMPLE_LAST):] == list(_SAMPLE_LAST)
-    # The r11 window: the three new planning/routing rows lead, and
-    # every name in the first 50 has an oracle (zero non-green entries
-    # by design).
-    assert names[0] == "lsh_planner_recommendations"
-    assert names[1] == "dedup_lane_choice"
-    assert names[2] == "auto_routed_near_dups"
-    assert all(qs[n].oracle is not None for n in names[:50])

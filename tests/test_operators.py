@@ -1375,3 +1375,31 @@ def test_ivf_and_pq_literal_broadcast_paths_identical(spark, monkeypatch):
     assert lit_cb == bc_cb
     with _pytest.raises(ValueError, match="LITERAL_CELLS_MAX"):
         sim.ivf_assign_expr([(0, [0.0, 1.0])], 1)
+
+
+def test_pq_broadcast_path_never_parses_the_codebook_literal(spark, monkeypatch):
+    """With the literal form switched off, pq_train_codebook must not
+    build (and parse) the nested codebook SQL literal it no longer uses,
+    and must still train the literal path's codebook."""
+    import data_algorithms_with_pyspark_spark.operators.clustering as cl
+    import data_algorithms_with_pyspark_spark.operators.similarity as sim
+
+    rows = [
+        (i, [float((i * 5 + d * 3) % 13) for d in range(4)])
+        for i in range(40)
+    ]
+    vecs = spark.createDataFrame(rows, ["vec_id", "vec"])
+    lit_cb = sim.pq_train_codebook(vecs, m=2, ksub=4, max_iter=2)
+
+    parsed = []
+    real_expr = sim.F.expr
+
+    def spy(sql):
+        parsed.append(sql)
+        return real_expr(sql)
+
+    monkeypatch.setattr(cl, "LITERAL_CELLS_MAX", 0)  # force broadcast path
+    monkeypatch.setattr(sim.F, "expr", spy)
+    bc_cb = sim.pq_train_codebook(vecs, m=2, ksub=4, max_iter=2)
+    assert not [s for s in parsed if s.startswith("array(array(array(")]
+    assert bc_cb == lit_cb

@@ -116,7 +116,6 @@ def test_baseline_queries_are_tagged_small_data_only(spark):
     for name in ("ngram_jaccard_near_dups", "embedding_cosine_near_dups"):
         q = all_queries()[name]
         assert "baseline" in q.tags and "small-data-only" in q.tags, name
-        assert q.bench is False, name
 
 
 def test_sequence_chunks_has_no_exchange(spark):
